@@ -11,10 +11,14 @@ table that each maintenance run advances incrementally:
     merge tree every build uses — sketch merge is associative and
     order-invariant, so the published state is byte-identical to a
     one-shot build over all files ever seen (pytest-pinned).
-  * `rollup_quantiles` / `rollup_cardinality` answer queries FROM the
-    stored blobs — no data re-scan, a mapInPandas over one row per
-    (group, sketch): the reason the warehouse exists. Grouping columns
-    come from the committed manifest, not from the caller.
+  * every per-group query over the stored blobs (`rollup_quantiles`,
+    `rollup_cardinality`, `rollup_histogram`, `rollup_topk` and the
+    `rollup_window_*` family) goes through one helper, `_blob_query`:
+    a mapInPandas over one row per (group, sketch) that decodes the
+    blob and asks it one question — no data re-scan, the reason the
+    warehouse exists. Each query supplies only its output columns, a
+    per-blob row generator and its sort keys. Grouping columns come
+    from the committed manifest, not from the caller.
   * `rollup_prune` deletes old committed versions (keeping the newest
     `keep`), bounding state-dir growth; manifests intentionally carry
     the FULL file lineage (the Iceberg-manifest shape — what makes the
@@ -952,40 +956,57 @@ def rollup_fsck(spark: SparkSession, state_dir: str,
             "aborted": sorted(aborted), "findings": findings}
 
 
-def _decode_map(sketch_name: str, fn_name: str, args: tuple, out_ddl: str):
-    """mapInPandas factory: decode each stored blob, call a query method,
-    emit one row per (group, arg). Empty sketches (a group whose value
-    column was entirely NULL) yield NULL estimates instead of poisoning
-    the whole query — the SQL-NULL rendering of the reference's
-    empty-bin NaN rule (/root/reference/ddsketch.cc:520-557); NaN
-    itself can't round-trip the pandas→Arrow hop, which treats NaN as
-    the null sentinel."""
-    import pandas as pd
+def _check_windows(windows: list[int]) -> list[int]:
+    """Trailing windows as native-unit ints. A negative window is
+    refused, as the CLI refuses it: it would silently cover nothing
+    (ts > now + |w|) and return empty/NaN rows as if the state were
+    empty."""
+    wins = [int(w) for w in windows]
+    for w in wins:
+        if w < 0:
+            raise UsageError(f"bad window {w} (must be >= 0)")
+    return wins
+
+
+def _blob_query(spark: SparkSession, state_dir: str, sketch_name: str,
+                version: int | None, versions: list | None, out_ddl: str,
+                method: str | None, emit, order: list) -> DataFrame:
+    """The one query path over stored blobs: a mapInPandas over the
+    committed version's `sketch_name` rows (one per group), zero input
+    re-scan. Each blob is decoded and its `method` looked up — a family
+    without it is a clean UsageError; `method=None` leaves the family
+    check to `emit`. `emit(sk, fn, rows_seen)` yields the output values
+    that follow the group key, typed by `out_ddl`; grouping columns come
+    from the committed manifest and rows sort by (group…, *order).
+    Empty sketches (a group whose value column was entirely NULL) emit
+    NaN estimates instead of poisoning the whole query; the pandas→Arrow
+    hop treats NaN as the null sentinel, so they surface as SQL NULL —
+    the rendering of the reference's empty-bin NaN rule."""
+    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
+                                          version, versions)
+    ddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
+                  for c in group_cols) + out_ddl
+    cols = [c.split(" ")[0] for c in ddl.split(", ")]
 
     def run(batches):
+        import pandas as pd
         for pdf in batches:
+            keys = [c for c in pdf.columns
+                    if c not in ("sketch", "sketch_name", "rows_seen")]
             rows = []
             for _, row in pdf.iterrows():
                 sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, fn_name, None)
-                if fn is None:
+                fn = getattr(sk, method, None) if method else None
+                if method and fn is None:
                     raise UsageError(
                         f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        f"does not support {fn_name!r}")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                if args:
-                    empty = getattr(sk, "n", 0) == 0
-                    for a in args:
-                        rows.append(base + [float(a),
-                                            np.nan if empty else float(fn(a)),
-                                            int(getattr(sk, "n", 0))])
-                else:
-                    rows.append(base + [float(fn()), int(row["rows_seen"])])
-            cols = [c.split(" ")[0] for c in out_ddl.split(", ")]
+                        f"does not support {method!r}")
+                base = [row[c] for c in keys]
+                rows.extend(base + tail
+                            for tail in emit(sk, fn, int(row["rows_seen"])))
             yield pd.DataFrame(rows, columns=cols)
 
-    return run
+    return st.mapInPandas(run, schema=ddl).orderBy(*group_cols, *order)
 
 
 def _version_state(spark: SparkSession, state_dir: str, sketch_name: str,
@@ -1019,12 +1040,6 @@ def _version_state(spark: SparkSession, state_dir: str, sketch_name: str,
     return st, group_cols, version, manifest
 
 
-def _grouped_state(spark: SparkSession, state_dir: str, sketch_name: str):
-    """(filtered blob table, group_cols from the committed manifest)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name)
-    return st, group_cols
-
-
 def rollup_quantiles(spark: SparkSession, state_dir: str, sketch_name: str,
                      qs: list[float], version: int | None = None,
                      _versions: list | None = None) -> DataFrame:
@@ -1033,14 +1048,19 @@ def rollup_quantiles(spark: SparkSession, state_dir: str, sketch_name: str,
     mapInPandas over |groups| rows, zero input-data re-scan. Grouping
     columns are read from the committed manifest; `version` picks a
     specific committed version (default latest)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}q double, estimate double, n long"
-    return (st.mapInPandas(_decode_map(sketch_name, "quantile", tuple(qs), ddl),
-                           schema=ddl)
-            .orderBy(*group_cols, "q"))
+    if not qs:
+        raise UsageError("rollup_quantiles needs at least one quantile "
+                         "in qs")
+    qv = [float(q) for q in qs]
+
+    def emit(sk, fn, rows_seen):
+        n = int(getattr(sk, "n", 0))
+        for q in qv:
+            yield [q, np.nan if n == 0 else float(fn(q)), n]
+
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "q double, estimate double, n long", "quantile",
+                       emit, ["q"])
 
 
 def rollup_cardinality(spark: SparkSession, state_dir: str,
@@ -1049,14 +1069,12 @@ def rollup_cardinality(spark: SparkSession, state_dir: str,
     """Distinct-count estimates from stored HLL/theta blobs; grouping
     columns are read from the committed manifest; `version` picks a
     specific committed version (default latest)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}estimate double, rows_seen long"
-    return (st.mapInPandas(_decode_map(sketch_name, "cardinality", (), ddl),
-                           schema=ddl)
-            .orderBy(*group_cols))
+    def emit(sk, fn, rows_seen):
+        yield [float(fn()), rows_seen]
+
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "estimate double, rows_seen long", "cardinality",
+                       emit, [])
 
 
 def rollup_overlap(spark: SparkSession, state_dir: str,
@@ -1171,45 +1189,31 @@ def rollup_histogram(spark: SparkSession, state_dir: str,
     to dump the histogram of a trailing window (the merge of its
     overlapping buckets). Output: (group…, key, count, lower, upper,
     estimate)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}key long, count long, lower double, upper double, "
-           "estimate double")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
+    from p2pddsketch_spark.sketches.ddsketch import DDSketch
+    from p2pddsketch_spark.sketches.wdds import WindowedDDSketch
+    if window is not None:
+        _check_windows([window])
 
-    def run(batches):
-        import pandas as pd
-        from p2pddsketch_spark.sketches.ddsketch import DDSketch
-        from p2pddsketch_spark.sketches.wdds import WindowedDDSketch
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                if isinstance(sk, WindowedDDSketch):
-                    merged, _, _ = sk.window_sketch(window, now)
-                    sk = merged if merged is not None else sk._mk()
-                elif isinstance(sk, DDSketch):
-                    if window is not None:
-                        raise UsageError(
-                            "windowed histograms need wdds blobs; "
-                            f"{sketch_name!r} is a plain full-stream "
-                            "DDSketch")
-                else:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "has no log-γ bin table (histogram needs "
-                        "dds or wdds blobs)")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for b in sk.to_bins_table():
-                    rows.append(base + [b["key"], b["count"], b["lower"],
-                                        b["upper"], b["estimate"]])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        if isinstance(sk, WindowedDDSketch):
+            merged, _, _ = sk.window_sketch(window, now)
+            sk = merged if merged is not None else sk._mk()
+        elif isinstance(sk, DDSketch):
+            if window is not None:
+                raise UsageError(
+                    "windowed histograms need wdds blobs; "
+                    f"{sketch_name!r} is a plain full-stream DDSketch")
+        else:
+            raise UsageError(
+                f"sketch {sketch_name!r} ({type(sk).__name__}) has no "
+                "log-γ bin table (histogram needs dds or wdds blobs)")
+        for b in sk.to_bins_table():
+            yield [b["key"], b["count"], b["lower"], b["upper"],
+                   b["estimate"]]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "key"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "key long, count long, lower double, upper double, "
+                       "estimate double", None, emit, ["key"])
 
 
 def rollup_topk(spark: SparkSession, state_dir: str,
@@ -1227,32 +1231,13 @@ def rollup_topk(spark: SparkSession, state_dir: str,
     quantile path's NULL-estimate row: an absent ranking is the honest
     answer, a NULL rank-1 item is not. Ordering (count desc, item asc)
     is the sketch's own deterministic tie-break."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}rank int, item long, count_est long, count_err long"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
+    def emit(sk, fn, rows_seen):
+        for rank, (item, cnt, err) in enumerate(fn(m), start=1):
+            yield [rank, item, cnt, err]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "top", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'top'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for rank, (item, cnt, err) in enumerate(fn(m), start=1):
-                    rows.append(base + [rank, item, cnt, err])
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "rank"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "rank int, item long, count_est long, count_err long",
+                       "top", emit, ["rank"])
 
 
 def rollup_window_topk(spark: SparkSession, state_dir: str,
@@ -1274,38 +1259,19 @@ def rollup_window_topk(spark: SparkSession, state_dir: str,
     emits no rows (the honest empty ranking, as in `rollup_topk`).
     Output: (group…, window, rank, item, count_est, count_err,
     n_covered, covered_from, covered_to)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, rank int, item long, count_est long, "
-           "count_err long, n_covered long, covered_from long, "
-           "covered_to long")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "window_top", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'window_top'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for w in wins:
-                    top, n_cov, lo, hi = fn(m, w, now=now)
-                    for rank, (item, cnt, err) in enumerate(top, start=1):
-                        rows.append(base + [w, rank, item, cnt, err,
-                                            n_cov, lo, hi])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        for w in wins:
+            top, n_cov, lo, hi = fn(m, w, now=now)
+            for rank, (item, cnt, err) in enumerate(top, start=1):
+                yield [w, rank, item, cnt, err, n_cov, lo, hi]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window", "rank"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window long, rank int, item long, count_est long, "
+                       "count_err long, n_covered long, covered_from long, "
+                       "covered_to long", "window_top", emit,
+                       ["window", "rank"])
 
 
 def rollup_window_cardinality(spark: SparkSession, state_dir: str,
@@ -1327,35 +1293,16 @@ def rollup_window_cardinality(spark: SparkSession, state_dir: str,
     compares activity-relative windows — pass an explicit warehouse
     clock for cross-group comparability. Output: (group…, window,
     estimate, rows_seen)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}window long, estimate double, rows_seen long"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "distinct_in_last", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'distinct_in_last'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                empty = sk.n_pairs == 0
-                for w in wins:
-                    est = np.nan if empty else float(fn(w, now=now))
-                    rows.append(base + [w, est, int(row["rows_seen"])])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        empty = sk.n_pairs == 0
+        for w in wins:
+            yield [w, np.nan if empty else float(fn(w, now=now)), rows_seen]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window long, estimate double, rows_seen long",
+                       "distinct_in_last", emit, ["window"])
 
 
 def rollup_window_rows(spark: SparkSession, state_dir: str,
@@ -1370,36 +1317,17 @@ def rollup_window_rows(spark: SparkSession, state_dir: str,
     receipt (|estimate - truth| <= err_bound, any arrival order).
     Window units / `now` semantics match `rollup_window_cardinality`.
     Output: (group…, window, estimate, err_bound)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}window long, estimate double, err_bound double"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "count_last", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'count_last'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                empty = sk.n_buckets == 0
-                for w in wins:
-                    est, err = ((np.nan, np.nan) if empty
-                                else fn(w, now=now))
-                    rows.append(base + [w, float(est), float(err)])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        empty = sk.n_buckets == 0
+        for w in wins:
+            est, err = (np.nan, np.nan) if empty else fn(w, now=now)
+            yield [w, float(est), float(err)]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window long, estimate double, err_bound double",
+                       "count_last", emit, ["window"])
 
 
 def rollup_window_counts(spark: SparkSession, state_dir: str,
@@ -1417,42 +1345,22 @@ def rollup_window_counts(spark: SparkSession, state_dir: str,
     and downward excursions are bounded by the count-min collision mass.
     Window units / `now` semantics match `rollup_window_cardinality`.
     Output: (group…, item, window, estimate, err_bound)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}item long, window long, estimate double, err_bound double"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     kq = np.asarray(sorted({int(k) for k in keys}), dtype=np.int64)
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "estimate_last", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'estimate_last'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                empty = sk.n_buckets == 0
-                for w in wins:
-                    if empty:
-                        est = np.full(kq.size, np.nan)
-                        err = np.full(kq.size, np.nan)
-                    else:
-                        est, err = fn(kq, w, now=now)
-                    for i, k in enumerate(kq):
-                        rows.append(base + [int(k), w, float(est[i]),
-                                            float(err[i])])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        for w in wins:
+            if sk.n_buckets == 0:
+                est = err = np.full(kq.size, np.nan)
+            else:
+                est, err = fn(kq, w, now=now)
+            for k, e, b in zip(kq, est, err):
+                yield [int(k), w, float(e), float(b)]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "item", "window"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "item long, window long, estimate double, "
+                       "err_bound double", "estimate_last", emit,
+                       ["item", "window"])
 
 
 def rollup_window_quantiles(spark: SparkSession, state_dir: str,
@@ -1472,38 +1380,19 @@ def rollup_window_quantiles(spark: SparkSession, state_dir: str,
     `now` semantics match `rollup_window_cardinality`.
     Output: (group…, window, q, estimate, n_covered, covered_from,
     covered_to)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, q double, estimate double, "
-           "n_covered long, covered_from long, covered_to long")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     qv = [float(q) for q in qs]
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "window_quantiles", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'window_quantiles'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for w in wins:
-                    ests, n_cov, lo, hi = fn(qv, window=w, now=now)
-                    for q, est in zip(qv, ests):
-                        rows.append(base + [w, q, float(est), int(n_cov),
-                                            int(lo), int(hi)])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        for w in wins:
+            ests, n_cov, lo, hi = fn(qv, window=w, now=now)
+            for q, est in zip(qv, ests):
+                yield [w, q, float(est), int(n_cov), int(lo), int(hi)]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window", "q"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window long, q double, estimate double, "
+                       "n_covered long, covered_from long, covered_to long",
+                       "window_quantiles", emit, ["window", "q"])
 
 
 def rollup_window_drift(spark: SparkSession, state_dir: str,
@@ -1536,67 +1425,46 @@ def rollup_window_drift(spark: SparkSession, state_dir: str,
     cur_err, prev_err) where metric is 'q<q>' / 'rows'; err columns
     carry EH's hard receipts and are NaN for wdds (its guarantee is
     the relative α contract). ratio is NaN when previous == 0."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, metric string, current double, "
-           "previous double, delta double, ratio double, "
-           "cur_err double, prev_err double")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
     qv = [float(q) for q in (qs or [0.5, 0.99])]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                t_ref = getattr(sk, "t_max", None)
-                for w in wins:
-                    ref = int(t_ref) if now is None else int(now)
-                    prev_now = ref - w
-                    if hasattr(sk, "window_quantiles"):
-                        cur, n_c, lo_c, _ = sk.window_quantiles(
-                            qv, window=w, now=ref)
-                        # an empty current window can't tile at its
-                        # coverage edge (lo_c is the 0 sentinel) —
-                        # anchor the previous window at ref - w so a
-                        # group that went SILENT still reports
-                        # (previous=real, current=NaN) instead of
-                        # NaN/NaN (same guard as window_topk_drift)
-                        prv, _, _, _ = sk.window_quantiles(
-                            qv, window=w, now=lo_c - 1 if n_c else ref - w)
-                        pairs = [(f"q{q:g}", float(c), float(p),
-                                  np.nan, np.nan)
-                                 for q, c, p in zip(qv, cur, prv)]
-                    elif hasattr(sk, "count_last"):
-                        c, ce = sk.count_last(w, now=ref)
-                        # previous window (ref-2w, ref-w] = suffix
-                        # difference; hard bounds add
-                        c2, e2 = sk.count(prev_now - w)
-                        p, pe = c2 - c, e2 + ce
-                        pairs = [("rows", float(c), float(p),
-                                  float(ce), float(pe))]
-                    else:
-                        raise UsageError(
-                            f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                            "cannot answer adjacent-window drift: interval "
-                            "queries need time-indexed (wdds) or "
-                            "subtractable (eh) state")
-                    for metric, c, p, ce, pe in pairs:
-                        delta = c - p
-                        ratio = c / p if p == p and p != 0.0 \
-                            else float("nan")
-                        rows.append(base + [w, metric, c, p, delta, ratio,
-                                            ce, pe])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        if not (hasattr(sk, "window_quantiles") or hasattr(sk, "count_last")):
+            raise UsageError(
+                f"sketch {sketch_name!r} ({type(sk).__name__}) "
+                "cannot answer adjacent-window drift: interval "
+                "queries need time-indexed (wdds) or "
+                "subtractable (eh) state")
+        t_ref = getattr(sk, "t_max", None)
+        for w in wins:
+            ref = int(t_ref) if now is None else int(now)
+            if hasattr(sk, "window_quantiles"):
+                cur, n_c, lo_c, _ = sk.window_quantiles(qv, window=w, now=ref)
+                # an empty current window can't tile at its coverage
+                # edge (lo_c is the 0 sentinel) — anchor the previous
+                # window at ref - w so a group that went SILENT still
+                # reports (previous=real, current=NaN) instead of
+                # NaN/NaN (same guard as window_topk_drift)
+                prv, _, _, _ = sk.window_quantiles(
+                    qv, window=w, now=lo_c - 1 if n_c else ref - w)
+                pairs = [(f"q{q:g}", float(c), float(p), np.nan, np.nan)
+                         for q, c, p in zip(qv, cur, prv)]
+            else:
+                c, ce = sk.count_last(w, now=ref)
+                # previous window (ref-2w, ref-w] = suffix difference;
+                # hard bounds add
+                c2, e2 = sk.count(ref - 2 * w)
+                p, pe = c2 - c, e2 + ce
+                pairs = [("rows", float(c), float(p), float(ce), float(pe))]
+            for metric, c, p, ce, pe in pairs:
+                ratio = c / p if p == p and p != 0.0 else float("nan")
+                yield [w, metric, c, p, c - p, ratio, ce, pe]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window", "metric"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window long, metric string, current double, "
+                       "previous double, delta double, ratio double, "
+                       "cur_err double, prev_err double", None, emit,
+                       ["window", "metric"])
 
 
 def rollup_window_topk_drift(spark: SparkSession, state_dir: str,
@@ -1626,62 +1494,54 @@ def rollup_window_topk_drift(spark: SparkSession, state_dir: str,
     CURRENT window is empty anchors the previous window at `now - w`
     instead of the (nonexistent) coverage edge and reports its former
     top-m as 'left' — going silent is churn, not absence of rows."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, item long, rank_prev int, rank_cur int, "
-           "count_prev long, count_cur long, delta long, status string, "
-           "prev_covered_from long, cur_covered_from long, "
-           "cur_covered_to long")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
-    wins = [int(w) for w in windows]
+    wins = _check_windows(windows)
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "window_top", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'window_top'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                t_ref = getattr(sk, "t_max", None)
-                for w in wins:
-                    ref = int(t_ref) if now is None else int(now)
-                    cur, _, lo_c, hi_c = fn(m, w, now=ref)
-                    # an empty current window can't tile at its
-                    # coverage edge — anchor the previous window at
-                    # ref - w so a group that went silent still
-                    # reports its former top-m as 'left' (the loudest
-                    # churn signal must not vanish into zero rows)
-                    prv, _, lo_p, _ = fn(m, w, now=lo_c - 1) if cur \
-                        else fn(m, w, now=ref - w)
-                    cur_d = {item: (rk, cnt) for rk, (item, cnt, _)
-                             in enumerate(cur, start=1)}
-                    prv_d = {item: (rk, cnt) for rk, (item, cnt, _)
-                             in enumerate(prv, start=1)}
-                    for item in sorted(cur_d.keys() | prv_d.keys()):
-                        pr, pc = prv_d.get(item, (None, None))
-                        cr, cc = cur_d.get(item, (None, None))
-                        status = ("entered" if pr is None
-                                  else "left" if cr is None else "moved")
-                        delta = None if pc is None or cc is None \
-                            else cc - pc
-                        rows.append(base + [w, item, pr, cr, pc, cc,
-                                            delta, status, lo_p, lo_c,
-                                            hi_c])
-            yield pd.DataFrame(rows, columns=cols)
+    def emit(sk, fn, rows_seen):
+        t_ref = getattr(sk, "t_max", None)
+        for w in wins:
+            ref = int(t_ref) if now is None else int(now)
+            cur, _, lo_c, hi_c = fn(m, w, now=ref)
+            # an empty current window can't tile at its coverage edge —
+            # anchor the previous window at ref - w so a group that went
+            # silent still reports its former top-m as 'left' (the
+            # loudest churn signal must not vanish into zero rows)
+            prv, _, lo_p, _ = fn(m, w, now=lo_c - 1 if cur else ref - w)
+            cur_d = {item: (rk, cnt) for rk, (item, cnt, _)
+                     in enumerate(cur, start=1)}
+            prv_d = {item: (rk, cnt) for rk, (item, cnt, _)
+                     in enumerate(prv, start=1)}
+            for item in sorted(cur_d.keys() | prv_d.keys()):
+                pr, pc = prv_d.get(item, (None, None))
+                cr, cc = cur_d.get(item, (None, None))
+                status = ("entered" if pr is None
+                          else "left" if cr is None else "moved")
+                delta = None if pc is None or cc is None else cc - pc
+                yield [w, item, pr, cr, pc, cc, delta, status, lo_p, lo_c,
+                       hi_c]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window",
-                     F.coalesce(F.col("rank_cur"), F.lit(1 << 30)),
-                     F.coalesce(F.col("rank_prev"), F.lit(1 << 30)),
-                     "item"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window long, item long, rank_prev int, rank_cur int, "
+                       "count_prev long, count_cur long, delta long, "
+                       "status string, prev_covered_from long, "
+                       "cur_covered_from long, cur_covered_to long",
+                       "window_top", emit,
+                       ["window",
+                        F.coalesce(F.col("rank_cur"), F.lit(1 << 30)),
+                        F.coalesce(F.col("rank_prev"), F.lit(1 << 30)),
+                        "item"])
+
+
+def _full_outer(a: DataFrame, b: DataFrame,
+                keys: list[str]) -> tuple[DataFrame, list]:
+    """Full outer join of two drift sides, NULL-safe on every key: a
+    group (or a NULL-valued group key) on one side only must still emit
+    its drift row. Returns the join and the coalesced key columns."""
+    cond = None
+    for k in keys:
+        c = a[k].eqNullSafe(b[k])
+        cond = c if cond is None else cond & c
+    return (a.join(b, cond, "full_outer"),
+            [F.coalesce(a[k], b[k]).alias(k) for k in keys])
 
 
 def rollup_topk_drift(spark: SparkSession, state_dir: str,
@@ -1719,13 +1579,7 @@ def rollup_topk_drift(spark: SparkSession, state_dir: str,
 
     a = side(v_from, "from")
     b = side(v_to, "to")
-    keys = list(gcols) + ["item"]
-    cond = None
-    for k in keys:
-        c = a[k].eqNullSafe(b[k])
-        cond = c if cond is None else cond & c
-    joined = a.join(b, cond, "full_outer")
-    out_keys = [F.coalesce(a[k], b[k]).alias(k) for k in keys]
+    joined, out_keys = _full_outer(a, b, list(gcols) + ["item"])
     status = (F.when(a["rank_from"].isNull(), F.lit("entered"))
               .when(b["rank_to"].isNull(), F.lit("left"))
               .otherwise(F.lit("moved")))
@@ -1815,14 +1669,7 @@ def rollup_drift(spark: SparkSession, state_dir: str, sketch_name: str = "dds",
     a = estimates(v_from, "from")
     b = estimates(v_to, "to")
     keys = list(gcols) + (["q"] if qs else [])
-    # full outer, NULL-safe on every key: a group (or a NULL-valued
-    # group key) on one side only must still emit its drift row
-    cond = None
-    for k in keys:
-        c = a[k].eqNullSafe(b[k])
-        cond = c if cond is None else cond & c
-    joined = a.join(b, cond, "full_outer")
-    out_keys = [F.coalesce(a[k], b[k]).alias(k) for k in keys]
+    joined, out_keys = _full_outer(a, b, keys)
     return (joined.select(
         *out_keys,
         a["est_from"], b["est_to"],

@@ -305,6 +305,14 @@ def test_empty_sketch_yields_null_not_crash(spark, tmp_path):
     assert rows["a"] > 0 and rows["b"] is None
 
 
+def test_empty_quantile_list_is_driver_side_usage_error(spark,
+                                                        events_state):
+    """`qs=[]` is refused on the driver with the typed UsageError before
+    any job runs — not a TypeError from `quantile()` inside a worker."""
+    with pytest.raises(UsageError, match="at least one quantile"):
+        R.rollup_quantiles(spark, events_state, "dds", [])
+
+
 def test_unsupported_query_method_is_clean_error(spark, seq_dir, tmp_path, capsys):
     """Asking an HLL blob for quantiles surfaces the typed UsageError
     through the CLI's JSON error contract, not an AttributeError
@@ -956,6 +964,30 @@ def test_sliding_warehouse_window_queries_match_exact(spark, tmp_path, capsys):
         assert abs(row["estimate"] - true) <= row["err_bound"] + 1e-6
 
 
+def test_negative_window_refused_by_library(spark, events_state):
+    """The library refuses a negative window exactly as the CLI's
+    `--windows=-7d` does: it would cover nothing and return empty/NaN
+    rows as if the state were empty. Checked on the driver for every
+    windowed query and for `rollup_histogram`'s single window."""
+    neg = [_DAY_US, -7 * _DAY_US]
+    calls = [
+        lambda: R.rollup_window_topk(spark, events_state, neg),
+        lambda: R.rollup_window_cardinality(spark, events_state, neg),
+        lambda: R.rollup_window_rows(spark, events_state, neg),
+        lambda: R.rollup_window_counts(spark, events_state, [1], neg),
+        lambda: R.rollup_window_quantiles(spark, events_state, [0.5], neg),
+        lambda: R.rollup_window_drift(spark, events_state, neg),
+        lambda: R.rollup_window_topk_drift(spark, events_state, neg),
+        lambda: R.rollup_histogram(spark, events_state, "wdds",
+                                   window=-_DAY_US),
+    ]
+    for call in calls:
+        with pytest.raises(UsageError, match="bad window"):
+            call()
+    # a zero window stays a valid (empty-coverage) question
+    assert R.rollup_window_rows(spark, events_state, [0]).count() > 0
+
+
 def test_sliding_incremental_shll_byte_identical(spark, tmp_path):
     """Split ingest of the shll family == one-shot, byte-identical blobs
     (the skyline is canonical, so warehouse increments commute)."""
@@ -1282,6 +1314,15 @@ def test_window_drift_adjacent_semantics(spark, tmp_path, capsys):
     assert rc == 1
     err = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "adjacent-window drift" in err["error"]
+
+
+def test_window_drift_on_family_without_t_max_is_clean_error(
+        spark, events_state):
+    """A plain dds blob has no `t_max`: window drift must still refuse
+    it with the family error, not a TypeError from anchoring `now`."""
+    from pyspark.errors import PySparkException
+    with pytest.raises(PySparkException, match="adjacent-window drift"):
+        R.rollup_window_drift(spark, events_state, [_DAY_US], "dds").collect()
 
 
 def test_window_drift_silent_group_reports_previous(spark, tmp_path, capsys):
@@ -2491,3 +2532,88 @@ def test_stream_dedup_output_invariant_under_batching(spark, tmp_path):
     for mft, (kept, keys) in results.items():
         assert keys == expect, mft
         assert kept == len(expect), mft
+
+
+# --------------------------------------------------- blob-query output schema
+
+_DAY_US = 86_400_000_000
+_G = "event_type:string,"
+_BLOB_QUERIES = {
+    "rollup_quantiles": (
+        lambda s, st: R.rollup_quantiles(s, st, "dds", [0.5, 0.99]),
+        "q:double,estimate:double,n:bigint"),
+    "rollup_cardinality": (
+        lambda s, st: R.rollup_cardinality(s, st, "hll"),
+        "estimate:double,rows_seen:bigint"),
+    "rollup_histogram": (
+        lambda s, st: R.rollup_histogram(s, st),
+        "key:bigint,count:bigint,lower:double,upper:double,estimate:double"),
+    "rollup_topk": (
+        lambda s, st: R.rollup_topk(s, st, m=3),
+        "rank:int,item:bigint,count_est:bigint,count_err:bigint"),
+    "rollup_window_topk": (
+        lambda s, st: R.rollup_window_topk(s, st, [7 * _DAY_US], m=3),
+        "window:bigint,rank:int,item:bigint,count_est:bigint,"
+        "count_err:bigint,n_covered:bigint,covered_from:bigint,"
+        "covered_to:bigint"),
+    "rollup_window_cardinality": (
+        lambda s, st: R.rollup_window_cardinality(s, st, [7 * _DAY_US]),
+        "window:bigint,estimate:double,rows_seen:bigint"),
+    "rollup_window_rows": (
+        lambda s, st: R.rollup_window_rows(s, st, [7 * _DAY_US]),
+        "window:bigint,estimate:double,err_bound:double"),
+    "rollup_window_counts": (
+        lambda s, st: R.rollup_window_counts(s, st, [1, 2], [7 * _DAY_US]),
+        "item:bigint,window:bigint,estimate:double,err_bound:double"),
+    "rollup_window_quantiles": (
+        lambda s, st: R.rollup_window_quantiles(s, st, [0.5],
+                                                [7 * _DAY_US]),
+        "window:bigint,q:double,estimate:double,n_covered:bigint,"
+        "covered_from:bigint,covered_to:bigint"),
+    "rollup_window_drift": (
+        lambda s, st: R.rollup_window_drift(s, st, [7 * _DAY_US]),
+        "window:bigint,metric:string,current:double,previous:double,"
+        "delta:double,ratio:double,cur_err:double,prev_err:double"),
+    "rollup_window_topk_drift": (
+        lambda s, st: R.rollup_window_topk_drift(s, st, [7 * _DAY_US], m=3),
+        "window:bigint,item:bigint,rank_prev:int,rank_cur:int,"
+        "count_prev:bigint,count_cur:bigint,delta:bigint,status:string,"
+        "prev_covered_from:bigint,cur_covered_from:bigint,"
+        "cur_covered_to:bigint"),
+}
+
+
+@pytest.fixture(scope="module")
+def events_state(spark, tmp_path_factory):
+    """One committed state over the events fixture holding every family
+    a blob query reads, built through the CLI `update` (token families
+    ingest a one-id `tokens` array per event)."""
+    import os
+    import sys
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    import rollup_sketches
+    root = tmp_path_factory.mktemp("events_state")
+    src = str(root / "events")
+    (spark.read.parquet(f"{SF_DIR}/events.parquet")
+     .withColumn("tokens", F.array("user_id")).write.parquet(src))
+    state = str(root / "state")
+    assert rollup_sketches.main([
+        "update", "--input", src, "--state", state,
+        "--group-cols", "event_type", "--value-col", "value",
+        "--tokens-col", "tokens", "--ts-col", "ts",
+        "--sketches", "dds,hll,wdds,eh,shll,ecm,wss,spacesaving",
+        "--wdds-bucket", "1d", "--hll-p", "12", "--ecm-width", "512",
+        "--salt-buckets", "4"]) == 0
+    return state
+
+
+@pytest.mark.parametrize("name", sorted(_BLOB_QUERIES))
+def test_blob_query_output_schema(spark, events_state, name):
+    """Every stored-blob query keeps its output contract: the manifest's
+    group columns first, then the function's own typed columns — and
+    the query runs to completion with rows for the fixture's groups."""
+    call, tail = _BLOB_QUERIES[name]
+    df = call(spark, events_state)
+    assert df.schema.simpleString() == f"struct<{_G}{tail}>"
+    assert df.count() > 0
